@@ -1,9 +1,13 @@
 #!/usr/bin/env python3
-"""Compute sf0.1 -> sf1.0 scaling exponents from two TimeQ logs.
+"""Compute sf0.1 -> sf1.0 scaling exponents from two `Inspect census` logs.
 
 exponent a satisfies t(sf) ~ sf^a between the two measured points:
 a = log10(t_sf1 / t_sf01) (the data grew 10x). a <= 1 is at-or-better
 than linear; the red flag the sweep exists to find is a >> 1.
+
+Each log is the stdout of `runMain graft.tools.Inspect census q_a q_b ...`
+run once with SPARK_GRAFT_SF_DIR at sf0.1 and once at sf1.0; the timed
+run's total_s column is the measurement.
 
 Usage: scale_trend.py /tmp/sweep_sf01.log /tmp/sweep_sf1.log
 """
@@ -15,7 +19,8 @@ import sys
 def parse(path):
     out = {}
     for line in open(path):
-        m = re.search(r"\[timeq\] (\S+)\s+([0-9.]+) s", line)
+        # census row: query total_s build_s jobs build_jobs stages tasks shufKB
+        m = re.match(r"(q\S+)\s+([0-9.]+)\s+[0-9.]+(\s+\d+){5}\s*$", line)
         if m:
             out[m.group(1)] = float(m.group(2))
     return out

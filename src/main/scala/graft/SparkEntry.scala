@@ -81,6 +81,9 @@ object SparkEntry {
     import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.expressions.Window
     val base = Files.createTempDirectory("graft_stream_gate").toString
+    // staged input, sink output and checkpoint all live under `base`; the
+    // gate's result reads the sink lazily, so the tree goes at JVM exit
+    registerTempDirCleanup(base)
     val inDir = s"$base/in"
     new java.io.File(inDir).mkdirs()
     // ONE partitioned write stages every segment + the sentinel (r19):
@@ -114,19 +117,22 @@ object SparkEntry {
   }
 
   /** Shared streaming-gate scaffold (all q_stream_*_gate entries): stage
-    * `staged` as 4 in-order segments (+ optional sentinel), hand `build`
+    * `staged` as 4 in-order segments (+ optional sentinel), hand `start`
     * a FACTORY of file-stream sources over them (the interval-join gate
-    * opens two), drain through the checkpointed parquet sink under 8
-    * state-store partitions (these drains hold few keys; 32 stores is
-    * pure per-store open/load/commit overhead — the Bench discipline),
-    * and return the materialized sink for the gate's readout. */
-  private def runStreamGate(
+    * opens two) plus the sink's output and checkpoint dirs, drain the
+    * query it starts under 8 state-store partitions (these drains hold
+    * few keys; 32 stores is pure per-store open/load/commit overhead —
+    * the Bench discipline), and return the sink's output dir with the
+    * finished query. */
+  private def drainStreamGate(
       s: SparkSession,
       staged: DataFrame,
       orderCols: Seq[org.apache.spark.sql.Column],
       extraLast: Option[DataFrame] = None,
       confs: Map[String, String] = Map.empty)(
-      build: (() => DataFrame) => DataFrame): DataFrame = {
+      start: (() => DataFrame, String, String) =>
+        org.apache.spark.sql.streaming.StreamingQuery)
+      : (String, org.apache.spark.sql.streaming.StreamingQuery) = {
     val (base, inDir) = stageTimeSegments(staged, 4, orderCols, extraLast)
     val schema = s.read.parquet(inDir).schema
     def src(): DataFrame = s.readStream.schema(schema)
@@ -134,15 +140,32 @@ object SparkEntry {
     val overrides = confs + ("spark.sql.shuffle.partitions" -> "8")
     val prev = overrides.keys.map(k => k -> s.conf.getOption(k)).toMap
     overrides.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
-      val q = graft.streaming.StreamingPipeline.startFileSink(
-        build(() => src()), s"$base/out", s"$base/ckpt")
+    val q = try {
+      val q = start(() => src(), s"$base/out", s"$base/ckpt")
       q.awaitTermination()
+      q
     } finally prev.foreach {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None) => s.conf.unset(k)
     }
-    s.read.parquet(s"$base/out")
+    (s"$base/out", q)
+  }
+
+  /** [[drainStreamGate]] through the checkpointed parquet file sink:
+    * `build` turns the source factory into the gate's streaming relation;
+    * returns the materialized sink for the gate's readout. */
+  private def runStreamGate(
+      s: SparkSession,
+      staged: DataFrame,
+      orderCols: Seq[org.apache.spark.sql.Column],
+      extraLast: Option[DataFrame] = None,
+      confs: Map[String, String] = Map.empty)(
+      build: (() => DataFrame) => DataFrame): DataFrame = {
+    val (out, _) = drainStreamGate(s, staged, orderCols, extraLast, confs) {
+      (src, out, ckpt) =>
+        graft.streaming.StreamingPipeline.startFileSink(build(src), out, ckpt)
+    }
+    s.read.parquet(out)
   }
 
   /** [[runStreamGate]] plus the operational LATE-DATA readout: returns the
@@ -158,27 +181,15 @@ object SparkEntry {
       orderCols: Seq[org.apache.spark.sql.Column],
       extraLast: Option[DataFrame])(
       build: (() => DataFrame) => DataFrame): (DataFrame, Long) = {
-    val (base, inDir) = stageTimeSegments(staged, 4, orderCols, extraLast)
-    val schema = s.read.parquet(inDir).schema
-    def src(): DataFrame = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val prev = s.conf.getOption("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val dropped = try {
-      val q = graft.streaming.StreamingPipeline.startFileSink(
-        build(() => src()), s"$base/out", s"$base/ckpt")
-      q.awaitTermination()
-      q.recentProgress.flatMap(_.stateOperators)
-        .map(_.numRowsDroppedByWatermark).sum
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.sql.shuffle.partitions", v)
-      case None => s.conf.unset("spark.sql.shuffle.partitions")
+    val (out, q) = drainStreamGate(s, staged, orderCols, extraLast) {
+      (src, out, ckpt) =>
+        graft.streaming.StreamingPipeline.startFileSink(build(src), out, ckpt)
     }
-    (s.read.parquet(s"$base/out"), dropped)
+    (s.read.parquet(out),
+      q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum)
   }
 
-  /** [[runStreamGate]]'s foreachBatch twin: same 4-segment staging and
-    * checkpointed drain, but each micro-batch lands through
+  /** [[runStreamGate]]'s foreachBatch twin: each micro-batch lands through
     * [[graft.streaming.StreamingPipeline.startScoredParquetSink]] — the
     * batch relation `score` applied per arriving batch (the shape for
     * stream-static scoring whose per-doc agg would force update mode). */
@@ -187,30 +198,20 @@ object SparkEntry {
       staged: DataFrame,
       orderCols: Seq[org.apache.spark.sql.Column])(
       score: DataFrame => DataFrame): DataFrame = {
-    val (base, inDir) = stageTimeSegments(staged, 4, orderCols, None)
-    val schema = s.read.parquet(inDir).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val prev = s.conf.getOption("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = graft.streaming.StreamingPipeline.startScoredParquetSink(
-        src, score, s"$base/out", s"$base/ckpt")
-      q.awaitTermination()
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.sql.shuffle.partitions", v)
-      case None => s.conf.unset("spark.sql.shuffle.partitions")
+    val (out, _) = drainStreamGate(s, staged, orderCols) { (src, out, ckpt) =>
+      graft.streaming.StreamingPipeline.startScoredParquetSink(src(), score, out, ckpt)
     }
     // _batch_id is the sink's exactly-once partition key (per-batch dynamic
     // overwrite) — provenance, not part of the scored relation the gate pins
-    s.read.parquet(s"$base/out").drop("_batch_id")
+    s.read.parquet(out).drop("_batch_id")
   }
 
   /** JVM-exit cleanup for gate temp dirs: registered once per distinct
     * path (idempotent under the bench's 3-5 rebuilds per run), deletes
     * the tree on shutdown so repeated bench JVMs don't accrete one
-    * corpus-sized export per pid into java.io.tmpdir. */
-  private val cleanupRegistered =
+    * corpus-sized export per pid into java.io.tmpdir. Package-visible so
+    * a spec can check that a gate's dir is registered. */
+  private[graft] val cleanupRegistered =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private def registerTempDirCleanup(path: String): Unit =
     if (cleanupRegistered.add(path)) {

@@ -5,12 +5,12 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
   * The dump runs WORKER-PARALLEL (default 4 threads, env
-  * `SPARK_GRAFT_VERIFY_PAR`): the 322 queries are independent, and a
+  * `SPARK_GRAFT_VERIFY_PAR`): the 338 queries are independent, and a
   * serial dump at ~1.5 s/query blows past a wall-time budget (the r16/r17
   * driver artifact came back `{}`). Each worker pulls names off one shared
   * queue and runs them on its OWN `spark.newSession()` clone — shared
-  * SparkContext (so the 32 cores are one pool), but per-thread SQLConf and
-  * temp-view catalog, so the streaming gates' scoped
+  * SparkContext (so all `SPARK_GRAFT_CPUS` cores are one pool), but
+  * per-thread SQLConf and temp-view catalog, so the streaming gates' scoped
   * `spark.sql.shuffle.partitions` save/restore and any temp views never
   * race across queries. Heavy families (the `q_stream_*` gates stage +
   * drain real micro-batches) are queued FIRST so the long poles start

@@ -272,11 +272,12 @@ object Dedup {
       .select(col("a_id"), col("b_id"), col("inter"), col("jac"))
   }
 
-  /** Candidate generation shared by [[ppjoinPairs]] and the plan probe
-    * ([[graft.tools.PpPlan]] measures the positional filter's cut by
-    * flipping `positional`). Returns (pinned rank-postings census,
-    * candidate pairs (a_id, b_id, a_sz, b_sz) after size filter +
-    * positional filter). */
+  /** Candidate generation shared by [[ppjoinPairs]] and the specs
+    * (DedupSpec's "ppjoin positional filter" tests measure the positional
+    * filter's cut by flipping `positional`; PlansSpec's "q_dedup_ppjoin"
+    * test pins the cached census reads and the candidate broadcasts).
+    * Returns (pinned rank-postings census, candidate pairs (a_id, b_id,
+    * a_sz, b_sz) after size filter + positional filter). */
   private[graft] def ppjoinSelfCandidates(
       docs: DataFrame,
       threshold: Double,

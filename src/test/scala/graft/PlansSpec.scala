@@ -149,15 +149,20 @@ class PlansSpec extends AnyFunSuite with SparkSpec {
     assert(!p.contains("CartesianProduct"), s"range join degenerated:\n$p")
   }
 
-  /** Finalized adaptive plan text, truncated before the "Initial Plan"
-    * echo so node counts reflect what actually ran. */
-  private def finalPlanText(name: String): String = {
-    val df = SparkEntry.queries(name)(spark, sf)
+  /** Finalized adaptive plan text of `df` after one run, without the
+    * "Initial Plan" echo, so node counts reflect what actually ran. (A
+    * cached relation's own adaptive plan still prints both sections.) */
+  private def finalPlanText(df: org.apache.spark.sql.DataFrame): String = {
     df.collect()
-    val s = df.queryExecution.executedPlan.toString
-    val cut = s.indexOf("== Initial Plan ==")
-    if (cut >= 0) s.substring(0, cut) else s
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan.toString
+      case p => p.toString
+    }
   }
+
+  private def finalPlanText(name: String): String =
+    finalPlanText(SparkEntry.queries(name)(spark, sf))
 
   test("q_user_features: all four feature columns share ONE exchange + ONE sort") {
     val s = finalPlanText("q_user_features")
@@ -250,11 +255,9 @@ class PlansSpec extends AnyFunSuite with SparkSpec {
 
   test("q_event_transitions: the corpus shuffles ONCE, by user, for the window") {
     // exchanges exist only after EnsureRequirements: use the executed plan
-    val df = SparkEntry.queries("q_event_transitions")(spark, sf)
-    df.collect() // finalize AQE
-    // look at the FINAL adaptive section only: the Initial Plan echo would
+    // look at the FINAL adaptive plan only: the Initial Plan echo would
     // double-count, and the totals branch must show as a ReusedExchange
-    val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    val p = finalPlanText("q_event_transitions")
     assert("Exchange hashpartitioning\\(user_id".r.findAllIn(p).size == 1,
       s"expected exactly one user-keyed exchange (the lead window):\n$p")
     assert(p.contains("ReusedExchange"),
@@ -444,5 +447,95 @@ class PlansSpec extends AnyFunSuite with SparkSpec {
     // count equals the per-chain total, not a multiple of it
     assert(stripSites <= graft.functions.TextFunctions.markupSteps.count(_._1),
       s"strip chain inlined into $stripSites sites:\n$s")
+  }
+
+  test("bitext miners: with size-based broadcasts off, no corpus side is broadcast") {
+    // An explicit broadcast() survives threshold -1: the r14 finding
+    // `y.join(broadcast(x), "bucket")` broadcast a corpus-sized exploded
+    // probe frame. LSH and IVF must plan every join as a keyed shuffle;
+    // PQ cross-joins one-row codebook aggregates (IdentityBroadcastMode,
+    // bounded metadata) but must never plan a keyed broadcast.
+    import graft.operators.Similarity
+    import org.apache.spark.sql.functions.col
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+      val xs = emb.filter(col("vec_id") % 2 === 0)
+      val ys = emb.filter(col("vec_id") % 2 === 1)
+      for ((name, df) <- Seq(
+          "lsh" -> Similarity.bitextMarginMineLsh(xs, ys, k = 4, nPlanes = 4),
+          "ivf" -> Similarity.bitextMarginMineIvf(xs, ys, k = 4, nlist = 16, nprobe = 4))) {
+        val p = df.queryExecution.executedPlan.toString
+        assert("BroadcastExchange".r.findAllIn(p).isEmpty,
+          s"$name broadcasts with size-based broadcasts off:\n$p")
+      }
+      val pq = Similarity.bitextMarginMinePq(xs, ys, k = 4, cand = 8, nlist = 16, nprobe = 4)
+        .queryExecution.executedPlan.toString
+      assert(!pq.contains("HashedRelationBroadcastMode"),
+        s"pq plans a keyed (corpus-side) broadcast:\n$pq")
+      assert("BroadcastExchange".r.findAllIn(pq).size ==
+          "BroadcastExchange Identity".r.findAllIn(pq).size,
+        s"pq broadcasts something other than a one-row codebook frame:\n$pq")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("q_dedup_ppjoin: the rank-postings census is read from cache on every " +
+      "branch; the verify joins broadcast the candidate side") {
+    // a first-cut array census recomputed per branch and ran 7x slower
+    val p = finalPlanText("q_dedup_ppjoin")
+    assert("TableCacheQueryStage".r.findAllIn(p).size >= 3,
+      s"census not read from cache on every branch:\n$p")
+    val verifyBroadcasts = p.linesIterator.count(l =>
+      l.contains("BroadcastHashJoin") && (l.contains("[a_id") || l.contains("[b_id")))
+    assert(verifyBroadcasts >= 2, s"verify joins must broadcast the candidates:\n$p")
+  }
+
+  test("q_dsir_weights broadcasts its model; the perplexity censuses are " +
+      "partially aggregated and pinned") {
+    def plan(name: String) =
+      SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+    val dsir = plan("q_dsir_weights")
+    assert(dsir.contains("BroadcastHashJoin"),
+      s"the DSIR log-ratio model must broadcast onto the per-doc counts:\n$dsir")
+    // the bigram census has four consumers and the trigram census five;
+    // unpinned, each re-derived the corpus scan and shuffle
+    for ((name, reads) <- Seq("q_perplexity_filter" -> 3, "q_perplexity3" -> 4)) {
+      val p = plan(name)
+      assert(p.contains("partial_"), s"$name census is not partially aggregated:\n$p")
+      assert("InMemoryTableScan".r.findAllIn(p).size >= reads,
+        s"$name census must be pinned and read by its $reads consumers:\n$p")
+    }
+  }
+
+  test("q_top_global: orderBy+limit plans TakeOrderedAndProject, never a global sort") {
+    val p = SparkEntry.queries("q_top_global")(spark, sf).queryExecution.executedPlan.toString
+    assert(p.contains("TakeOrderedAndProject"), s"expected per-partition top-k heaps:\n$p")
+    assert("Sort \\[".r.findAllIn(p).isEmpty, s"top-k planned a global sort:\n$p")
+  }
+
+  test("q_dedup_embed_lsh: the min-meeting-bucket filter leaves no id-pair distinct") {
+    val p = finalPlanText("q_dedup_embed_lsh")
+    assert("HashAggregate.*a_id.*b_id".r.findAllIn(p).isEmpty,
+      s"candidate pairs are deduplicated by an aggregate:\n$p")
+  }
+
+  test("q_dedup_substr / q_boilerplate: the census exchanges carry md5s, never text") {
+    import org.apache.spark.sql.types.{ArrayType, BinaryType, StringType}
+    for (name <- Seq("q_dedup_substr", "q_boilerplate")) {
+      val census = executedShuffles(name).filter(_.output.exists(_.name == "__h"))
+      assert(census.nonEmpty, s"$name: no md5-keyed census exchange")
+      for (e <- census) {
+        val wide = e.output.filter(a => a.name != "__h" && (a.dataType match {
+          case StringType | BinaryType | _: ArrayType => true
+          case _ => false
+        }))
+        assert(wide.isEmpty, s"$name: a census exchange carries ${wide.map(_.name)}")
+      }
+    }
   }
 }

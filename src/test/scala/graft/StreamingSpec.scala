@@ -1157,4 +1157,18 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // with n_ops counting all 3 log rows — 4.0 never surfaced
     assert(got == Seq((1L, "U", 5.0, 1L), (1L, "U", 6.0, 3L)))
   }
+
+  test("a stream gate registers its staging dir for removal at JVM exit") {
+    // staged input, sink output and checkpoint share one temp dir per gate
+    // construction; Bench rebuilds every gate several times per run
+    import scala.jdk.CollectionConverters._
+    val before = SparkEntry.cleanupRegistered.asScala.toSet
+    val gate = SparkEntry.queries("q_stream_console_gate")(spark, "/root/testdata/sf0.001")
+    val added = SparkEntry.cleanupRegistered.asScala.toSet -- before
+    val dirs = added.filter(_.contains("graft_stream_gate"))
+    assert(dirs.size == 1, s"expected one registered gate dir, got $added")
+    assert(new java.io.File(dirs.head, "out").isDirectory,
+      s"the registered dir should hold the gate's sink: ${dirs.head}")
+    assert(gate.count() > 0)
+  }
 }
